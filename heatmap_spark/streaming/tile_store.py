@@ -43,16 +43,54 @@ aggregates, the merge shuffles (base ∪ delta) AGGREGATE rows — never
 raw event history — and the base row count is bounded by the live tile
 set, so steady-state cost is O(batch + live tiles of touched buckets),
 independent of total history (the property that matters at 100 TB/day).
+
+Serving cost: a point read (:func:`read_resultset`) of a parent at
+zoom >= ``BUCKET_ZOOM`` reads the marker of its one bucket (no listing
+of the store), scans that bucket's single file with the declared
+:data:`STORE_SCHEMA` (no schema-inference job), and packages the result
+set with one parameterised SQL statement — ONE Spark job of ONE stage,
+no exchange.  Every version is written in :data:`STORE_SCHEMA`.  Pass
+the caller's ``spark`` through every metadata helper: a thread other
+than the session's creator has no active session to fall back on.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from heatmap_spark.operators.layout import cluster_by_zorder
-from heatmap_spark.operators.pyramid import build_pyramid, pyramid_merge
+from heatmap_spark.operators.pyramid import build_pyramid, pyramid_merge, resultsets
 
 _LATEST = "_LATEST"
+
+# The schema every store version is written in (the pyramid's output
+# contract).  Reads declare it: inferring it from parquet footers
+# launches a Spark job per read, more than the read itself costs.
+STORE_SCHEMA = StructType(
+    [
+        StructField("user_group", StringType()),
+        StructField("timespan", StringType()),
+        StructField("zoom", IntegerType(), nullable=False),
+        StructField("row", LongType()),
+        StructField("col", LongType()),
+        StructField("visits", DoubleType()),
+    ]
+)
+
+
+def _in_store_schema(df: DataFrame) -> DataFrame:
+    """``df``'s pyramid columns cast to :data:`STORE_SCHEMA`, so a
+    delta of any numeric key types is written in the declared schema."""
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in STORE_SCHEMA.fields])
 
 
 def _join(*parts: str) -> str:
@@ -265,9 +303,11 @@ class _Fs:
             return None  # vanished under a racing writer
 
 
-def _read_marker(store_path: str) -> tuple[int, int]:
+def _read_marker(
+    store_path: str, spark: SparkSession | None = None
+) -> tuple[int, int]:
     """(version, last_batch_id), (-1, -1) if nothing committed."""
-    fs = _Fs()
+    fs = _Fs(spark)
     marker = _join(store_path, _LATEST)
     if not fs.exists(marker):
         return -1, -1
@@ -281,9 +321,9 @@ def read_tile_store(spark: SparkSession, store_path: str) -> DataFrame | None:
     Layout-dispatching: a flat ``_LATEST`` marker wins; otherwise any
     live ``bucket=`` dirs are read through the partitioned path — so
     readers need not know which layout the writer used."""
-    version, _ = _read_marker(store_path)
+    version, _ = _read_marker(store_path, spark)
     if version >= 0:
-        return spark.read.parquet(_join(store_path, f"v={version}"))
+        return spark.read.schema(STORE_SCHEMA).parquet(_join(store_path, f"v={version}"))
     return read_partitioned_store(spark, store_path)
 
 
@@ -297,10 +337,11 @@ def merge_delta_into_store(
     O(store) per batch — use :func:`merge_delta_into_partitioned_store`
     (the production default) unless the pyramid has zoom levels below
     ``BUCKET_ZOOM``."""
-    version, last_batch = _read_marker(store_path)
+    version, last_batch = _read_marker(store_path, spark)
     if batch_id <= last_batch:
         return False
     base = read_tile_store(spark, store_path)
+    delta = _in_store_schema(delta)
     merged = delta if base is None else pyramid_merge(base, delta)
     nxt = version + 1
     out = cluster_by_zorder(
@@ -395,8 +436,10 @@ def _bucket_marker_path(store_path: str, bucket: int) -> str:
     return _join(store_path, f"bucket={bucket}", _LATEST)
 
 
-def _read_bucket_marker(store_path: str, bucket: int) -> tuple[int, int]:
-    fs = _Fs()
+def _read_bucket_marker(
+    store_path: str, bucket: int, spark: SparkSession | None = None
+) -> tuple[int, int]:
+    fs = _Fs(spark)
     marker = _bucket_marker_path(store_path, bucket)
     if not fs.exists(marker):
         return -1, -1
@@ -404,15 +447,30 @@ def _read_bucket_marker(store_path: str, bucket: int) -> tuple[int, int]:
     return int(version), int(batch)
 
 
-def _live_buckets(store_path: str) -> list[int]:
-    fs = _Fs()
-    out = []
-    for d in fs.list_names(store_path):
-        if d.startswith("bucket="):
-            k = int(d.split("=", 1)[1])
-            if _read_bucket_marker(store_path, k)[0] >= 0:
-                out.append(k)
-    return sorted(out)
+def _bucket_versions(
+    store_path: str, buckets: list[int], spark: SparkSession | None = None
+) -> dict[int, int]:
+    """Committed version of each of ``buckets`` that has one: two
+    metadata calls per bucket, none for buckets not asked for."""
+    out = {}
+    for k in buckets:
+        version, _ = _read_bucket_marker(store_path, k, spark)
+        if version >= 0:
+            out[k] = version
+    return out
+
+
+def _bucket_dirs(store_path: str, spark: SparkSession | None = None) -> list[int]:
+    """Every ``bucket=`` directory of the store, committed or not."""
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in _Fs(spark).list_names(store_path)
+        if d.startswith("bucket=")
+    )
+
+
+def _live_buckets(store_path: str, spark: SparkSession | None = None) -> list[int]:
+    return list(_bucket_versions(store_path, _bucket_dirs(store_path, spark), spark))
 
 
 def read_partitioned_store(
@@ -423,16 +481,17 @@ def read_partitioned_store(
     Passing an explicit bucket list is DIRECTORY-level partition
     pruning: a bbox serving read maps its viewport to coarse cells and
     never opens the other buckets' files (row-group Z-order skipping
-    then applies within — operators/layout.py)."""
-    live = _live_buckets(store_path)
-    ks = live if buckets is None else [k for k in buckets if k in set(live)]
-    if not ks:
+    then applies within — operators/layout.py).  Only the requested
+    buckets' markers are read (O(len(buckets)) metadata calls, not a
+    listing of the store), and the scan declares :data:`STORE_SCHEMA`
+    instead of launching a footer-reading job."""
+    if buckets is None:
+        buckets = _bucket_dirs(store_path, spark)
+    versions = _bucket_versions(store_path, buckets, spark)
+    if not versions:
         return None
-    paths = [
-        _join(store_path, f"bucket={k}", f"v={_read_bucket_marker(store_path, k)[0]}")
-        for k in ks
-    ]
-    return spark.read.parquet(*paths)
+    paths = [_join(store_path, f"bucket={k}", f"v={v}") for k, v in versions.items()]
+    return spark.read.schema(STORE_SCHEMA).parquet(*paths)
 
 
 def merge_delta_into_partitioned_store(
@@ -464,19 +523,19 @@ def merge_delta_into_partitioned_store(
     skipped, regardless of where the previous attempt died.  Markers
     move strictly forward because streaming batch ids are monotone.
     """
-    from pyspark.sql import functions as F
-
     from pyspark.storagelevel import StorageLevel
 
     fs = _Fs(spark)
     # two actions consume the delta (touched-bucket collect + staging
     # write) — cut lineage once so the micro-batch pyramid is built
     # once, not twice (same DISK_ONLY discipline as the cascade)
-    d = delta.withColumn(
+    d = _in_store_schema(delta).withColumn(
         "bucket", spatial_bucket(bucket_zoom)
     ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     touched = sorted(r.bucket for r in d.select("bucket").distinct().collect())
-    pending = [k for k in touched if _read_bucket_marker(store_path, k)[1] < batch_id]
+    pending = [
+        k for k in touched if _read_bucket_marker(store_path, k, spark)[1] < batch_id
+    ]
     if not pending:
         return 0
     d_pending = d.where(F.col("bucket").isin(pending))
@@ -528,7 +587,7 @@ def merge_delta_into_partitioned_store(
                 # zero, so the staged dir legitimately has no rows —
                 # commit an EMPTY (schema-bearing) version so readers
                 # see zero tiles for this bucket
-                ver, _ = _read_bucket_marker(store_path, k)
+                ver, _ = _read_bucket_marker(store_path, k, spark)
                 dst = _join(store_path, f"bucket={k}", f"v={ver + 1}")
                 if fs.is_dir(dst):
                     fs.delete(dst)
@@ -548,7 +607,7 @@ def merge_delta_into_partitioned_store(
             raise RuntimeError(
                 f"staged bucket dir vanished before commit: {src}"
             )
-        ver, _ = _read_bucket_marker(store_path, k)
+        ver, _ = _read_bucket_marker(store_path, k, spark)
         dstdir = _join(store_path, f"bucket={k}")
         fs.mkdirs(dstdir)
         dst = _join(dstdir, f"v={ver + 1}")
@@ -617,16 +676,22 @@ def read_resultset(
     (the store is written sorted by (bucket, zoom, row, col)).  Cost
     is O(one bucket's row groups), independent of store size.
 
+    Cost of one read: the markers of the requested buckets only (two
+    metadata calls each, no listing of the store), a scan that declares
+    :data:`STORE_SCHEMA` (no footer-reading job), and one
+    :func:`resultsets` statement (one parse and analysis, key values as
+    parameter markers).  A one-bucket read is ONE job of ONE stage: the
+    bucket's version is a single file (the merge repartitions by
+    bucket), so the filtered scan is coalesced to one partition and the
+    aggregate needs no exchange.  A multi-bucket parent keeps the
+    parallel scan and its exchange.  A parent whose buckets hold no
+    version runs the same statement over a scan of zero files: no job.
+
     Output: one (user_group, timespan, rs_zoom, rs_row, rs_col,
     heatmap, rs_tile_id) row (empty if the key has no visits), plus
     the sink-shape JSON via :func:`heatmap_table` composes on top.
     """
-    from pyspark.sql import functions as F
-
-    from heatmap_spark.operators.pyramid import resultsets
-
     z, r, c = (int(x) for x in rs_tile_id.split("_"))
-    dz = z + delta
     if z >= bucket_zoom:
         buckets = [(r >> (z - bucket_zoom)) * (1 << bucket_zoom) + (c >> (z - bucket_zoom))]
     else:
@@ -637,24 +702,18 @@ def read_resultset(
             for bc in range(c * span, (c + 1) * span)
         ]
     base = read_partitioned_store(spark, store_path, buckets=buckets)
-    if base is None:
-        return spark.createDataFrame(
-            [],
-            "user_group string, timespan string, rs_zoom int, rs_row bigint,"
-            " rs_col bigint, heatmap map<string,double>, rs_tile_id string",
-        )
-    detail = base.where(
-        (F.col("zoom") == dz)
-        & (F.col("user_group") == user_group)
-        & (F.col("timespan") == timespan)
-        & F.col("row").between(r << delta, ((r + 1) << delta) - 1)
-        & F.col("col").between(c << delta, ((c + 1) << delta) - 1)
-    )
-    return resultsets(detail, delta)
+    if base is None:  # no committed version: the same scan over zero files
+        base = spark.read.schema(STORE_SCHEMA).parquet()
+    elif len(buckets) == 1:
+        base = base.coalesce(1)
+    return resultsets(base, delta, parent=(user_group, timespan, z, r, c))
 
 
 def vacuum_partitioned_store(
-    store_path: str, keep: int = 1, staging_age_s: float = 3600.0
+    store_path: str,
+    keep: int = 1,
+    staging_age_s: float = 3600.0,
+    spark: SparkSession | None = None,
 ) -> int:
     """Delete superseded version directories, keeping the latest
     ``keep`` versions per bucket (the Delta VACUUM analogue for this
@@ -676,10 +735,12 @@ def vacuum_partitioned_store(
     age threshold and its staging is swept, it FAILS LOUDLY (raises
     before committing any marker) rather than losing the batch, and
     the failed batch then relies on stream restart/replay.  Pass
-    ``staging_age_s=0`` for the old sweep-everything behavior."""
+    ``staging_age_s=0`` for the old sweep-everything behavior.  Pass
+    ``spark`` when calling from a thread other than the one that
+    created the session: a remote store's metadata calls need it."""
     import time
 
-    fs = _Fs()
+    fs = _Fs(spark)
     removed = 0
     now = time.time()
     for d in fs.list_names(store_path):
@@ -695,7 +756,7 @@ def vacuum_partitioned_store(
         if not d.startswith("bucket="):
             continue
         k = int(d.split("=", 1)[1])
-        latest, _ = _read_bucket_marker(store_path, k)
+        latest, _ = _read_bucket_marker(store_path, k, spark)
         if latest < 0:
             continue
         floor = latest - keep + 1

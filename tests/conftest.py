@@ -169,7 +169,6 @@ SLOW_TESTS = {
     "tests/test_tile_store.py::test_partitioned_store_equals_batch_and_prunes",
     "tests/test_tile_store.py::test_partitioned_store_retraction_and_full_cancellation",
     "tests/test_tile_store.py::test_partitioned_streaming_face_equals_batch",
-    "tests/test_tile_store.py::test_point_resultset_read_matches_batch",
     "tests/test_tile_store.py::test_streamed_store_equals_batch_pyramid",
     "tests/test_tile_store.py::test_vacuum_keeps_latest_versions_readable",
     "tests/test_tiles_property.py::test_tile_id_property",

@@ -1,5 +1,6 @@
 """Streaming tile store: multi-batch merge == batch pyramid; replay guard."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.pyramid import build_pyramid
@@ -229,50 +230,174 @@ def test_fs_layer_handles_scheme_qualified_uris(spark, tmp_path):
     assert not fs.exists(base)
 
 
-def test_point_resultset_read_matches_batch(spark, sf_smoke, tmp_path):
+# a quote and a backslash: key values must reach the SQL as parameter
+# markers, never as text
+ODD_GROUP = "o'brien\\"
+
+
+@pytest.fixture(scope="module")
+def served_store(spark, sf_smoke, tmp_path_factory):
+    """A partitioned store of the zoom 7-12 pyramid at a scheme-qualified
+    path, and that pyramid.  Three points belong to ODD_GROUP's user."""
+    from heatmap_spark.streaming.tile_store import merge_delta_into_partitioned_store
+
+    loc = load_locations(spark, sf_smoke)
+    odd = loc.orderBy("ts", "latitude", "longitude").limit(3)
+    pyr = build_pyramid(
+        loc.unionByName(odd.withColumn("user_id", F.lit(ODD_GROUP))),
+        mode="explode",
+        min_zoom=7,
+        max_zoom=12,
+    ).localCheckpoint()
+    store = "file:" + str(tmp_path_factory.mktemp("served") / "pstore")
+    merge_delta_into_partitioned_store(spark, pyr, store, batch_id=0)
+    return store, pyr
+
+
+def _hit_tile(pyr) -> str:
+    r = pyr.where("zoom = 12 AND user_group = 'all'").orderBy("row", "col").first()
+    return f"7_{r['row'] >> 5}_{r['col'] >> 5}"
+
+
+def test_point_resultset_read_matches_batch(spark, served_store):
     """Serving read: one (user_group, timespan, parent tile) fetched
-    from the partitioned store equals the batch resultsets row; the
-    scan opens only the parent's coarse cell(s)."""
+    from the partitioned store equals the batch resultsets row — for
+    parents in one bucket, a parent spanning many buckets, and a user
+    group holding SQL metacharacters.  Misses are empty, not errors.
+    A one-bucket read is one job with no exchange."""
+    import uuid
+
     from heatmap_spark.operators.pyramid import resultsets
     from heatmap_spark.streaming.tile_store import (
-        merge_delta_into_partitioned_store,
+        BUCKET_ZOOM,
+        _live_buckets,
         read_resultset,
     )
 
-    store = str(tmp_path / "pstore")
-    pyr = build_pyramid(load_locations(spark, sf_smoke), mode="explode", **ZOOMS)
-    merge_delta_into_partitioned_store(spark, pyr, store, batch_id=0)
-
-    want_all = resultsets(pyr.where(F.col("zoom") == 12), 5)
-    # a couple of distinct keys, including the aggregate group
+    store, pyr = served_store
+    want_all = resultsets(pyr.where(F.col("zoom").isin(7, 12)), 5)
+    keys = want_all.select("user_group", "timespan", "rs_zoom", "rs_tile_id")
     picks = (
-        want_all.select("user_group", "timespan", "rs_tile_id")
-        .orderBy("user_group", "rs_tile_id")
-        .limit(3)
-        .collect()
+        # one-bucket parents, including the aggregate group
+        keys.where("rs_zoom = 7").orderBy("user_group", "rs_tile_id").limit(3).collect()
+        # a zoom-2 parent over zoom-7 detail: 4^(BUCKET_ZOOM-2) buckets
+        + keys.where("rs_zoom = 2 AND user_group = 'all'").orderBy("rs_tile_id").limit(1).collect()
+        + keys.where(F.col("user_group") == ODD_GROUP).orderBy("rs_tile_id").collect()
     )
-    assert picks
+    assert {p["rs_zoom"] for p in picks} == {2, 7} and 2 < BUCKET_ZOOM
+    assert ODD_GROUP in {p["user_group"] for p in picks}
+    # map columns disallow set ops — compare via deterministic JSON
+    ser = lambda df: df.select(
+        "user_group", "timespan", "rs_tile_id", F.to_json("heatmap").alias("j")
+    ).collect()
     for p in picks:
-        got = read_resultset(
-            spark, store, p["user_group"], p["timespan"], p["rs_tile_id"]
-        )
+        got = read_resultset(spark, store, p["user_group"], p["timespan"], p["rs_tile_id"])
         want = want_all.where(
             (F.col("user_group") == p["user_group"])
             & (F.col("timespan") == p["timespan"])
             & (F.col("rs_tile_id") == p["rs_tile_id"])
         )
-        assert got.count() == 1
-        # map columns disallow set ops — compare via deterministic JSON
-        ser = lambda df: df.select(
-            "user_group", "timespan", "rs_tile_id", F.to_json("heatmap").alias("j")
-        )
-        assert ser(got).exceptAll(ser(want)).isEmpty()
-        assert ser(want).exceptAll(ser(got)).isEmpty()
+        assert ser(got) == ser(want), p
+
+    hit = read_resultset(spark, store, "all", "alltime", _hit_tile(pyr))
     # absent key → empty, not an error
-    assert (
-        read_resultset(spark, store, "no-such-group", "alltime", "7_1_1").count()
-        == 0
-    )
+    assert read_resultset(spark, store, "no-such-group", "alltime", "7_1_1").count() == 0
+    # SQL metacharacters in a key never widen the match
+    assert read_resultset(spark, store, "all' OR '1'='1", "alltime", _hit_tile(pyr)).count() == 0
+    # a parent in a bucket with no committed version (empty ocean)
+    empty = sorted(set(range(1 << (2 * BUCKET_ZOOM))) - set(_live_buckets(store, spark)))
+    assert empty
+    br, bc = divmod(empty[0], 1 << BUCKET_ZOOM)
+    shift = 7 - BUCKET_ZOOM
+    ocean = read_resultset(spark, store, "all", "alltime", f"7_{br << shift}_{bc << shift}")
+    assert ocean.collect() == [] and ocean.schema == hit.schema
+
+    # one bucket: no exchange in the plan, one Spark job for the read
+    assert "Exchange" not in hit._jdf.queryExecution().executedPlan().toString()
+    sc = spark.sparkContext
+    group = f"point-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert len(hit.collect()) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_point_read_off_the_main_thread_uses_the_callers_session(
+    spark, served_store, monkeypatch
+):
+    """A server answers reads from request threads, where
+    SparkSession.getActiveSession() is None: the metadata I/O of a read
+    (and of a vacuum) must run on the session passed in, which a remote
+    store's Hadoop calls need."""
+    import threading
+
+    from heatmap_spark.streaming import tile_store as ts
+
+    store, pyr = served_store
+    tile = _hit_tile(pyr)
+    sessions = []
+
+    class SpyFs(ts._Fs):
+        def __init__(self, spark=None):
+            super().__init__(spark)
+            sessions.append(self._spark)
+
+    monkeypatch.setattr(ts, "_Fs", SpyFs)
+    out = {}
+
+    def serve():
+        try:
+            out["rows"] = ts.read_resultset(spark, store, "all", "alltime", tile).collect()
+            out["removed"] = ts.vacuum_partitioned_store(store, spark=spark)
+        except Exception as e:  # noqa: BLE001 — re-raised by the asserts below
+            out["error"] = e
+
+    t = threading.Thread(target=serve)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert "error" not in out, out.get("error")
+    assert len(out["rows"]) == 1 and out["removed"] == 0
+    assert sessions and all(s is not None for s in sessions)
+
+
+def test_one_bucket_read_reads_only_its_own_marker(spark, served_store, monkeypatch):
+    """A point read makes a constant number of metadata calls — its own
+    bucket's marker — not a listing of the store plus every marker."""
+    from heatmap_spark.streaming import tile_store as ts
+
+    store, pyr = served_store
+    assert len(ts._live_buckets(store, spark)) > 100
+    tile = _hit_tile(pyr)
+    z, r, c = (int(x) for x in tile.split("_"))
+    shift = z - ts.BUCKET_ZOOM
+    marker = ts._bucket_marker_path(store, (r >> shift) * (1 << ts.BUCKET_ZOOM) + (c >> shift))
+    calls = []
+
+    class CountingFs(ts._Fs):
+        def exists(self, path):
+            calls.append(("exists", path))
+            return super().exists(path)
+
+        def read_text(self, path):
+            calls.append(("read_text", path))
+            return super().read_text(path)
+
+        def list_names(self, path):
+            calls.append(("list_names", path))
+            return super().list_names(path)
+
+        def is_dir(self, path):
+            calls.append(("is_dir", path))
+            return super().is_dir(path)
+
+    monkeypatch.setattr(ts, "_Fs", CountingFs)
+    ts.read_resultset(spark, store, "all", "alltime", tile)
+    assert calls == [("exists", marker), ("read_text", marker)]
 
 
 def test_partitioned_store_retraction_and_full_cancellation(spark, sf_smoke, tmp_path):
