@@ -208,8 +208,6 @@ def pyramid_explode(
     """
     if detail_zoom is None:
         detail_zoom = max_zoom
-    z = F.col("zoom")
-    delta = (F.lit(detail_zoom) - z).cast("int")
     pref = _pref_cols(expanded)
     leveled = expanded.select(
         "user_group",
@@ -223,8 +221,8 @@ def pyramid_explode(
         "user_group",
         "timespan",
         "zoom",
-        F.floor(F.col("row") / F.pow(F.lit(2.0), delta)).alias("row"),
-        F.floor(F.col("col") / F.pow(F.lit(2.0), delta)).alias("col"),
+        F.expr(f"shiftright(row, {detail_zoom} - zoom)").alias("row"),
+        F.expr(f"shiftright(col, {detail_zoom} - zoom)").alias("col"),
         "weight",
         *pref,
     )
@@ -350,8 +348,8 @@ def pyramid_cascade(
             "user_group",
             "timespan",
             (F.lit(z) - d).alias("zoom"),
-            F.floor(F.col("row") / F.pow(F.lit(2.0), d)).alias("row"),
-            F.floor(F.col("col") / F.pow(F.lit(2.0), d)).alias("col"),
+            F.expr("shiftright(row, delta)").alias("row"),
+            F.expr("shiftright(col, delta)").alias("col"),
             "weight",
             *pref,
         )

@@ -6,14 +6,17 @@ codegen'd fold; at 100 TB the scan parallelizes per-partition and the
 top-k is a per-partition heap + small final merge via window).
 
 Scale path: IVF-style bucketed search — assign every vector to its
-nearest of C coarse centroids (derived deterministically from the data
-itself), search only within the query's bucket(s).  Cuts the candidate
-set ~C× at the cost of recall; both variants share the same cosine
-kernel.
+nearest of C coarse centroids, search only within the query's
+bucket(s).  Cuts the candidate set ~C× at the cost of recall.  The
+codebook costs one Spark job: it fetches at most 256 vectors per list
+(FAISS's max_points_per_centroid, Johnson et al., "Billion-scale
+similarity search with GPUs"), chosen by the smallest xxhash64(vec_id),
+then runs Lloyd in numpy on the driver; assignment is a map-only
+Arrow/numpy kernel.
 
 The dot product is a sequential left fold (F.aggregate over zip_with)
 in double precision — the same order DuckDB's list_sum(list_transform)
-uses, so results are bit-comparable for the oracle.
+and the numpy IVF kernels use, so results are bit-comparable.
 """
 
 from __future__ import annotations
@@ -121,63 +124,117 @@ def knn_cosine_df(
     )
 
 
-def _bucket_centroids(assigned: DataFrame, bucket_col) -> dict[int, list[float]]:
-    """Per-bucket coordinate means of (…, vec) rows → {bucket: centroid}.
-    One posexplode + two aggregates; the result is k x dim doubles,
-    collected driver-side by design (IVF codebooks embed in the plan)."""
-    rows = (
-        assigned.select(bucket_col.alias("b"), F.posexplode("vec").alias("pos", "x"))
-        .groupBy("b", "pos")
-        .agg(F.avg("x").alias("m"))
-        .groupBy("b")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("b", F.transform(F.col("pm"), lambda s: s["m"]).alias("centroid"))
-        .collect()
-    )
-    return {r["b"]: r["centroid"] for r in rows}
+#: FAISS's max_points_per_centroid: training-set vectors per IVF list.
+MAX_POINTS_PER_CENTROID = 256
+
+
+def _affinity_fold(C):
+    """Centroids C (k, dim) → V (n, dim) ↦ (n, k) affinities, folded
+    like :func:`dot_expr` (round each product, add in dimension order
+    from 0.0) so they are bit-identical to it — BLAS sums in another
+    order.  A closure, so executor kernels ship it by value."""
+    import numpy as np
+
+    def affinities(V):
+        acc = np.zeros((V.shape[0], C.shape[0]))
+        for j in range(C.shape[1]):
+            acc += V[:, j, None] * C[None, :, j]
+        return acc
+
+    return affinities
 
 
 def ivf_codebook(
     emb: DataFrame, n_buckets: int = 8, train_iters: int = 0
 ) -> dict[int, list[float]]:
-    """Train the IVF coarse codebook: per-coordinate means of vectors
-    seeded by vec_id % n_buckets, optionally refined by ``train_iters``
-    Lloyd (k-means) iterations — each iteration is one map-only argmax
-    reassignment plus one centroid aggregate (no shuffle of the vectors
-    beyond the agg), so training cost is linear in iterations.  The
-    codebook is k x dim doubles, collected driver-side by design (it
-    embeds in the serving plan as literals)."""
-    codebook = _bucket_centroids(emb, F.col("vec_id") % n_buckets)
+    """Train the IVF coarse codebook {bucket: centroid}: means of the
+    vectors seeded by vec_id % n_buckets, refined by ``train_iters``
+    Lloyd iterations (argmax affinity, ties to the lowest bucket; an
+    empty bucket keeps its centroid).
+
+    Cost: ONE Spark job fetches the training set as Arrow, then Lloyd
+    runs in numpy on the driver.  The training set is every vector if
+    there are at most MAX_POINTS_PER_CENTROID * n_buckets (FAISS's
+    rule), else that many with the smallest (xxhash64(vec_id), vec_id):
+    a per-partition top-n, so driver memory is bounded and the sample
+    does not depend on partitioning.  The k x dim codebook embeds in
+    serving plans as literals."""
+    import numpy as np
+
+    t = (
+        emb.select("vec_id", "vec")
+        .orderBy(F.xxhash64("vec_id"), "vec_id")
+        .limit(MAX_POINTS_PER_CENTROID * n_buckets)
+        .toArrow()
+        .sort_by("vec_id")
+    )
+    if not t.num_rows:
+        return {}
+    ids = t.column("vec_id").to_numpy()
+    V = np.stack(t.column("vec").to_numpy(zero_copy_only=False))
+
+    def means(labels):
+        return {int(b): V[labels == b].mean(axis=0) for b in np.unique(labels)}
+
+    codebook = means(np.fmod(ids, n_buckets))  # Java % sign rule
     for _ in range(train_iters):
-        assigned = _assign_to_codebook(emb, codebook)
-        new_codebook = _bucket_centroids(assigned, F.col("bucket"))
-        # empty buckets keep their previous centroid
-        codebook = {**codebook, **new_codebook}
-    return codebook
+        C = np.array([codebook[b] for b in sorted(codebook)])
+        codebook = {**codebook, **means(np.argmax(_affinity_fold(C)(V), axis=1))}
+    return {b: codebook[b].tolist() for b in sorted(codebook)}
 
 
 def ivf_assign(emb: DataFrame, n_buckets: int = 8, train_iters: int = 0) -> DataFrame:
     """Assign vectors to coarse buckets by nearest centroid.  Returns
     (vec_id, vec, bucket).  Default 0 iterations keeps the seed
-    codebook (deterministic, and what the declared queries pin)."""
+    codebook (deterministic, and what the declared queries pin).  Cost:
+    the training job of :func:`ivf_codebook`, then one map-only scan."""
     return _assign_to_codebook(emb, ivf_codebook(emb, n_buckets, train_iters))
 
 
 def _assign_to_codebook(emb: DataFrame, codebook: dict[int, list[float]]) -> DataFrame:
-    # Assignment is a MAP-ONLY argmax — no crossJoin row blow-up, no
-    # window shuffle; measured 5x faster at the 1M-vector probe than
-    # the crossJoin+row_number spelling.
+    """(vec_id, vec) → (vec_id, vec, bucket) in one map-only Arrow/numpy
+    kernel (no exchange; the codebook ships in the closure).  bucket is
+    the first maximum of the fold affinities, as in the Lloyd step of
+    :func:`ivf_codebook`."""
+    import numpy as np
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    affinities = _affinity_fold(
+        np.array([codebook[b] for b in sorted(codebook)], dtype=np.float64)
+    )
+    src = emb.select("vec_id", "vec")
+
+    def kern(batches):
+        for pdf in batches:
+            V = np.stack(pdf["vec"].to_numpy())
+            pdf["bucket"] = np.argmax(affinities(V), axis=1).astype("int32")
+            yield pdf
+
+    return src.mapInPandas(
+        kern, StructType(src.schema.fields + [StructField("bucket", IntegerType())])
+    )
+
+
+def _top_buckets(vec: Column, codebook: dict[int, list[float]], n: int) -> Column:
+    """The ``n`` buckets of highest fold affinity to ``vec``, best first:
+    sorted by (affinity desc, bucket asc), the argmax's tie order."""
     cents = lit_double_arrays([codebook[b] for b in sorted(codebook)])
-    affs = F.transform(cents, lambda c: dot_expr(F.col("vec"), c))
-    # array_position on the max → FIRST maximal bucket (ties break to
-    # the lowest bucket id, matching the old desc-affinity/asc-bucket
-    # window order).  affs goes through a real column first so the k·dim
-    # dot products are computed once, not once per reference (Catalyst
-    # does no CSE across expression references).
-    bucket = (F.array_position(F.col("__affs__"), F.array_max("__affs__")) - 1).cast("int")
-    return (
-        emb.withColumn("__affs__", affs)
-        .select("vec_id", "vec", bucket.alias("bucket"))
+    scored = F.transform(
+        cents, lambda c, i: F.struct((-dot_expr(vec, c)).alias("neg_aff"), i.alias("b"))
+    )
+    return F.transform(F.slice(F.array_sort(scored), 1, n), lambda s: s["b"])
+
+
+def ivf_residuals(nv: DataFrame, coarse: dict[int, list[float]]) -> DataFrame:
+    """(vec_id, vec) → (vec_id, bucket, vec − its bucket's centroid):
+    the IVFADC residuals, map-only."""
+    cents = lit_double_arrays([coarse[b] for b in sorted(coarse)])
+    return _assign_to_codebook(nv, coarse).select(
+        "vec_id",
+        "bucket",
+        F.zip_with(
+            "vec", F.element_at(cents, F.col("bucket") + 1), lambda a, b: a - b
+        ).alias("vec"),
     )
 
 
@@ -314,18 +371,7 @@ def knn_cosine_ivf_df(
     else:
         if codebook is None:
             raise ValueError("nprobe > 1 requires the codebook (assigned=None)")
-        # probe buckets: sort (aff desc, bucket asc) — same tie order as
-        # the argmax in _assign_to_codebook — and slice the top nprobe
-        cents = lit_double_arrays([codebook[b] for b in sorted(codebook)])
-        scored_b = F.transform(
-            cents,
-            lambda c, i: F.struct(
-                (-dot_expr(F.col("qvec"), c)).alias("neg_aff"), i.alias("b")
-            ),
-        )
-        probe = F.transform(
-            F.slice(F.array_sort(scored_b), 1, nprobe), lambda s: s["b"]
-        )
+        probe = _top_buckets(F.col("qvec"), codebook, nprobe)
         q2 = F.broadcast(
             queries.withColumn("probe_buckets", probe).drop("bucket")
         )
@@ -399,17 +445,7 @@ def embedding_near_dup_pairs_df(
     pair join then evaluates only the dot product, cutting the
     interpreted higher-order-function work per candidate ~3×."""
     if assigned is None:
-        codebook = ivf_codebook(emb, n_buckets)
-        cents = lit_double_arrays([codebook[b] for b in sorted(codebook)])
-        scored_b = F.transform(
-            cents,
-            lambda c, i: F.struct(
-                (-dot_expr(F.col("vec"), c)).alias("neg_aff"), i.alias("b")
-            ),
-        )
-        top = F.transform(
-            F.slice(F.array_sort(scored_b), 1, n_assign), lambda s: s["b"]
-        )
+        top = _top_buckets(F.col("vec"), ivf_codebook(emb, n_buckets), n_assign)
         assigned = emb.select("vec_id", "vec", F.explode(top).alias("bucket"))
     with_norm = assigned.select(
         "bucket", "vec_id", "vec", norm_expr(F.col("vec")).alias("nrm")
@@ -1380,34 +1416,20 @@ def ivfpq_build(
     DataFrame (vec_id, bucket, codes array<int>)) — the codes relation
     is the stored artifact (m bytes + a bucket id per vector).
 
-    Scale shape: coarse assign is the map-only argmax literal plan
-    (:func:`_assign_to_codebook`); residual subtraction is a map-only
-    zip_with against centroid literals; PQ training/encode are the
-    linear Arrow paths.  Nothing shuffles the corpus beyond the
-    existing codebook aggregates."""
+    Scale shape: the coarse codebook is one bounded training-set fetch
+    (:func:`ivf_codebook`); coarse assign and residuals are map-only
+    (:func:`ivf_residuals`); PQ training/encode are the linear Arrow
+    paths."""
     # everything downstream lives in the normalized space (cosine), so
     # the coarse codebook trains on normalized vectors too.
     # train_sample_n caps BOTH codebook trainings to the first N
     # vectors (the production lifecycle: train on a sample, encode the
     # full corpus — codebook quality saturates long before corpus size)
     nv = emb.select("vec_id", _l2_normalize(F.col("vec")).alias("vec"))
-    tr = nv if train_sample_n is None else nv.where(F.col("vec_id") < train_sample_n)
-    coarse = ivf_codebook(tr, n_buckets, train_iters)
-    assigned = _assign_to_codebook(nv, coarse)
-    cents = lit_double_arrays([coarse[b] for b in sorted(coarse)])
-    resid = assigned.select(
-        "vec_id",
-        "bucket",
-        F.zip_with(
-            "vec", F.element_at(cents, F.col("bucket") + 1), lambda a, b: a - b
-        ).alias("vec"),
-    )
-    resid_tr = (
-        resid
-        if train_sample_n is None
-        else resid.where(F.col("vec_id") < train_sample_n)
-    )
-    cb = pq_codebooks(resid_tr, m, k, dim, train_iters, normalize=False)
+    sample = F.lit(True) if train_sample_n is None else F.col("vec_id") < train_sample_n
+    coarse = ivf_codebook(nv.where(sample), n_buckets, train_iters)
+    resid = ivf_residuals(nv, coarse)
+    cb = pq_codebooks(resid.where(sample), m, k, dim, train_iters, normalize=False)
     codes = pq_encode_np(resid, cb, m, k, dim, normalize=False).join(
         resid.select("vec_id", "bucket"), "vec_id"
     )
@@ -1437,24 +1459,11 @@ def ivfpq_opq_build(
     encode scan.  The codes artifact is the same m bytes + bucket id
     per vector."""
     nv = emb.select("vec_id", _l2_normalize(F.col("vec")).alias("vec"))
-    tr = nv if train_sample_n is None else nv.where(F.col("vec_id") < train_sample_n)
-    coarse = ivf_codebook(tr, n_buckets, train_iters)
-    assigned = _assign_to_codebook(nv, coarse)
-    cents = lit_double_arrays([coarse[b] for b in sorted(coarse)])
-    resid = assigned.select(
-        "vec_id",
-        "bucket",
-        F.zip_with(
-            "vec", F.element_at(cents, F.col("bucket") + 1), lambda a, b: a - b
-        ).alias("vec"),
-    )
-    resid_tr = (
-        resid
-        if train_sample_n is None
-        else resid.where(F.col("vec_id") < train_sample_n)
-    )
+    sample = F.lit(True) if train_sample_n is None else F.col("vec_id") < train_sample_n
+    coarse = ivf_codebook(nv.where(sample), n_buckets, train_iters)
+    resid = ivf_residuals(nv, coarse)
     R, cb = opq_train(
-        resid_tr, m, k, dim, opq_iters, train_iters, normalize=False
+        resid.where(sample), m, k, dim, opq_iters, train_iters, normalize=False
     )
     codes = pq_encode_np(
         rotate_vectors(resid.select("vec_id", "vec"), R), cb, m, k, dim,

@@ -48,10 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.similarity import (
-    _assign_to_codebook,
     _l2_normalize,
     ivf_codebook,
-    lit_double_arrays,
+    ivf_residuals,
     opq_train,
     pq_codebooks,
     pq_encode_np,
@@ -114,7 +113,7 @@ def load_ann_rotation(spark: SparkSession, store_path: str):
     """The frozen OPQ rotation (dim×dim nested list), or None for a
     plain-IVFPQ store (the rotation dir only exists when the model was
     trained with ``opq=True``)."""
-    if not _Fs().exists(_join(store_path, "model", "opq_r")):
+    if not _Fs(spark).exists(_join(store_path, "model", "opq_r")):
         return None
     rows = spark.read.parquet(_join(store_path, "model", "opq_r")).collect()
     return [list(r["row"]) for r in sorted(rows, key=lambda r: r["i"])]
@@ -122,15 +121,7 @@ def load_ann_rotation(spark: SparkSession, store_path: str):
 
 def _encode_batch(batch_emb, coarse, cb, m, k, dim, R=None):
     nv = batch_emb.select("vec_id", _l2_normalize(F.col("vec")).alias("vec"))
-    assigned = _assign_to_codebook(nv, coarse)
-    cents = lit_double_arrays([coarse[b] for b in sorted(coarse)])
-    resid = assigned.select(
-        "vec_id",
-        "bucket",
-        F.zip_with(
-            "vec", F.element_at(cents, F.col("bucket") + 1), lambda a, b: a - b
-        ).alias("vec"),
-    )
+    resid = ivf_residuals(nv, coarse)
     enc_in = resid.select("vec_id", "vec")
     if R is not None:
         # OPQ arm: residuals pass through the frozen rotation before
@@ -163,7 +154,7 @@ def merge_batch_into_ann_store(
     batches rotate-then-encode — still per-row deterministic, so the
     streamed store stays bit-identical to the one-shot build.
     Returns False (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
+    if batch_id <= _read_last_batch(store_path, spark):
         return False
     fs = _Fs(spark)
     if not fs.exists(_join(store_path, "model", _MODEL_READY)):
@@ -171,13 +162,7 @@ def merge_batch_into_ann_store(
             "vec_id", _l2_normalize(F.col("vec")).alias("vec")
         )
         coarse = ivf_codebook(nv, n_buckets, train_iters)
-        cents = lit_double_arrays([coarse[b] for b in sorted(coarse)])
-        resid = _assign_to_codebook(nv, coarse).select(
-            "vec_id",
-            F.zip_with(
-                "vec", F.element_at(cents, F.col("bucket") + 1), lambda a, b: a - b
-            ).alias("vec"),
-        )
+        resid = ivf_residuals(nv, coarse)
         if opq:
             R, cb = opq_train(
                 resid, m, k, dim, opq_iters, train_iters, normalize=False
@@ -197,7 +182,7 @@ def merge_batch_into_ann_store(
 
 
 def _codes_base(spark, store_path):
-    fs = _Fs()
+    fs = _Fs(spark)
     marker = _join(store_path, "codes_base", _LATEST)
     if not fs.exists(marker):
         return None, -1, -1
@@ -212,7 +197,7 @@ def _codes_base(spark, store_path):
 def read_ann_codes(spark: SparkSession, store_path: str) -> DataFrame | None:
     """Every committed code row: compacted base + partials since."""
     base, _, folded = _codes_base(spark, store_path)
-    dirs = _committed_batches(store_path, "codes", min_batch=folded)
+    dirs = _committed_batches(store_path, "codes", min_batch=folded, spark=spark)
     parts = [spark.read.parquet(*dirs)] if dirs else []
     if base is not None:
         parts.append(base)
@@ -230,9 +215,9 @@ def compact_ann_store(spark: SparkSession, store_path: str) -> int:
     marker + pure-GC deletes — the crash-safe protocol."""
     fs = _Fs(spark)
     base, ver, folded = _codes_base(spark, store_path)
-    dirs = _committed_batches(store_path, "codes", min_batch=folded)
+    dirs = _committed_batches(store_path, "codes", min_batch=folded, spark=spark)
     if not dirs:
-        for p in _committed_batches(store_path, "codes"):
+        for p in _committed_batches(store_path, "codes", spark=spark):
             if _batch_id(p) <= folded:
                 fs.delete(p)
         return 0
@@ -246,7 +231,7 @@ def compact_ann_store(spark: SparkSession, store_path: str) -> int:
     fs.write_text_atomic(
         _join(store_path, "codes_base", _LATEST), f"{ver + 1}:{new_folded}"
     )
-    for p in _committed_batches(store_path, "codes"):
+    for p in _committed_batches(store_path, "codes", spark=spark):
         if _batch_id(p) <= new_folded:
             fs.delete(p)
     return len(dirs)
@@ -360,7 +345,7 @@ def monitor_ann_drift(
 def read_ann_drift(spark: SparkSession, store_path: str) -> DataFrame:
     """The committed drift log — one row per probed batch;
     ``retrain_flag`` is the monitored column."""
-    dirs = _committed_batches(store_path, "drift")
+    dirs = _committed_batches(store_path, "drift", spark=spark)
     if not dirs:
         return spark.createDataFrame([], DRIFT_SCHEMA)
     return spark.read.parquet(*dirs)

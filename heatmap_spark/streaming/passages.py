@@ -47,8 +47,8 @@ from heatmap_spark.streaming.tile_store import _Fs, _join
 _LATEST = "_LATEST"
 
 
-def _read_last_batch(store_path: str) -> int:
-    fs = _Fs()
+def _read_last_batch(store_path: str, spark: SparkSession | None = None) -> int:
+    fs = _Fs(spark)
     marker = _join(store_path, _LATEST)
     if not fs.exists(marker):
         return -1
@@ -60,15 +60,16 @@ def _batch_id(path: str) -> int:
 
 
 def _committed_batches(
-    store_path: str, sub: str, min_batch: int = -1
+    store_path: str, sub: str, min_batch: int = -1, spark: SparkSession | None = None
 ) -> list[str]:
     """Paths of ``sub``'s per-batch dirs with ``min_batch`` < id ≤ the
     committed marker (uncommitted/partial dirs from a crashed attempt
     are ignored; dirs already folded into a compacted base are skipped
     via ``min_batch`` so a crash between the base-marker swap and the
-    partial deletes can never double-count — deletion is pure GC)."""
-    fs = _Fs()
-    last = _read_last_batch(store_path)
+    partial deletes can never double-count — deletion is pure GC).
+    Pass ``spark`` off the main thread, where no session is active."""
+    fs = _Fs(spark)
+    last = _read_last_batch(store_path, spark)
     out = []
     for d in fs.list_names(_join(store_path, sub)):
         if d.startswith("batch="):

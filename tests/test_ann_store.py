@@ -176,3 +176,44 @@ def test_opq_arm_codes_equal_one_shot_and_serve(spark, sf_smoke, tmp_path):
     store2 = str(tmp_path / "plain")
     assert merge_batch_into_ann_store(spark, batches[0], store2, 0)
     assert load_ann_rotation(spark, store2) is None
+
+
+def test_store_calls_off_the_main_thread_use_the_callers_session(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """A merge and a model load run from a new thread, where
+    SparkSession.getActiveSession() is None: every metadata call must
+    run on the session passed in, which a remote store's Hadoop calls
+    need."""
+    import threading
+
+    from heatmap_spark.streaming import ann_store, passages
+    from heatmap_spark.streaming.ann_store import load_ann_rotation
+
+    sessions = []
+
+    class SpyFs(ann_store._Fs):
+        def __init__(self, spark=None):
+            super().__init__(spark)
+            sessions.append(self._spark)
+
+    monkeypatch.setattr(ann_store, "_Fs", SpyFs)
+    monkeypatch.setattr(passages, "_Fs", SpyFs)
+    batch = _emb(spark, sf_smoke).where(F.col("vec_id") < 200)
+    store = str(tmp_path / "store")
+    out = {}
+
+    def serve():
+        try:
+            out["merged"] = merge_batch_into_ann_store(spark, batch, store, 0)
+            out["rotation"] = load_ann_rotation(spark, store)
+        except Exception as e:  # noqa: BLE001 — re-raised by the asserts below
+            out["error"] = e
+
+    t = threading.Thread(target=serve)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive()
+    assert "error" not in out, out.get("error")
+    assert out["merged"] and out["rotation"] is None
+    assert sessions and all(s is not None for s in sessions)

@@ -68,3 +68,45 @@ def test_resultsets_statement_matches_column_api(spark, sf_smoke):
     assert len(g) > 100
     assert g == w
 
+
+def _floor_power_explode(expanded, min_zoom, max_zoom):
+    """pyramid_explode as it computed ancestors before the integer
+    shift: FLOOR(row / POWER(2.0, delta)) in doubles."""
+    delta = (F.lit(max_zoom) - F.col("zoom")).cast("int")
+    pref = P._pref_cols(expanded)
+    leveled = expanded.select(
+        "user_group",
+        "timespan",
+        F.explode(F.sequence(F.lit(min_zoom), F.lit(max_zoom))).alias("zoom"),
+        "row",
+        "col",
+        "weight",
+        *pref,
+    ).select(
+        "user_group",
+        "timespan",
+        "zoom",
+        F.floor(F.col("row") / F.pow(F.lit(2.0), delta)).alias("row"),
+        F.floor(F.col("col") / F.pow(F.lit(2.0), delta)).alias("col"),
+        "weight",
+        *pref,
+    )
+    return P._level_agg(leveled).select(*P.PYRAMID_COLS)
+
+
+def test_pyramid_ancestors_are_integer_shifts(spark, sf_smoke):
+    """Both pyramid modes shift ancestors in integers (no POWER in the
+    plan) and give the same schema, rows and result-set JSON bytes as
+    the FLOOR/POWER spelling."""
+    lo, hi = P.MIN_PYRAMID_ZOOM, P.DETAIL_MAX_ZOOM
+    expanded = P.expand_groups_and_timespans(
+        P.ingest_locations(load_locations(spark, sf_smoke), hi, partition_prefix_zoom=lo),
+        ("alltime", "month"),
+    ).localCheckpoint()
+    want = _floor_power_explode(expanded, lo, hi)
+    want_rows, want_rs = sorted(want.collect()), _rows(P.resultsets(want))
+    for got in (P.pyramid_explode(expanded, lo, hi), P.pyramid_cascade(expanded, lo, hi)):
+        assert "POWER" not in got._jdf.queryExecution().executedPlan().toString().upper()
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == want_rows
+        assert _rows(P.resultsets(got)) == want_rs

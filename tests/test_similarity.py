@@ -1,5 +1,9 @@
 """Similarity-search semantics tests beyond the DuckDB oracle."""
 
+import os
+import uuid
+
+import pytest
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.similarity import ivf_assign, knn_cosine, knn_cosine_ivf
@@ -655,3 +659,133 @@ def test_lit_double_arrays_bitwise_equals_column_spelling(spark):
     ).first()
     pack = lambda arr: [struct.pack("<d", v) for sub in arr for v in sub]  # noqa: E731
     assert pack(row["o"]) == pack(row["n"])
+
+
+# ---------------------------------------------------------------------------
+# IVF coarse codebook: driver-side Lloyd vs the Spark-aggregate spelling
+# ---------------------------------------------------------------------------
+
+
+def _emb_vec(spark, sf_dir):
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+
+
+def _reference_bucket_centroids(assigned, bucket_col):
+    """The per-bucket coordinate means as the engine computed them
+    before the driver-side Lloyd: posexplode + two aggregates."""
+    rows = (
+        assigned.select(bucket_col.alias("b"), F.posexplode("vec").alias("pos", "x"))
+        .groupBy("b", "pos")
+        .agg(F.avg("x").alias("m"))
+        .groupBy("b")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select("b", F.transform(F.col("pm"), lambda s: s["m"]).alias("centroid"))
+        .collect()
+    )
+    return {r["b"]: r["centroid"] for r in rows}
+
+
+def _reference_assign(emb, codebook):
+    """The interpreted higher-order-function argmax the numpy kernel
+    replaced: first maximum of the JVM fold affinities."""
+    from heatmap_spark.operators.similarity import dot_expr, lit_double_arrays
+
+    cents = lit_double_arrays([codebook[b] for b in sorted(codebook)])
+    affs = F.transform(cents, lambda c: dot_expr(F.col("vec"), c))
+    bucket = (F.array_position(F.col("__affs__"), F.array_max("__affs__")) - 1).cast("int")
+    return emb.withColumn("__affs__", affs).select("vec_id", "vec", bucket.alias("bucket"))
+
+
+def _reference_codebook(emb, n_buckets, train_iters):
+    codebook = _reference_bucket_centroids(emb, F.col("vec_id") % n_buckets)
+    for _ in range(train_iters):
+        assigned = _reference_assign(emb, codebook)
+        codebook = {**codebook, **_reference_bucket_centroids(assigned, F.col("bucket"))}
+    return codebook
+
+
+def _buckets(assigned):
+    return dict(assigned.select("vec_id", "bucket").collect())
+
+
+def test_fold_affinities_are_bitwise_dot_expr_and_ties_go_low(spark, sf_smoke):
+    """The numpy fold reproduces dot_expr bit for bit, and a codebook
+    whose centroids come in identical pairs assigns every vector to the
+    lower bucket of its pair, in the kernel and the reference alike."""
+    import numpy as np
+
+    from heatmap_spark.operators.similarity import (
+        _affinity_fold,
+        _assign_to_codebook,
+        dot_expr,
+        ivf_codebook,
+        lit_double_arrays,
+    )
+
+    emb = _emb_vec(spark, sf_smoke)
+    codebook = ivf_codebook(emb, 8, 1)
+    cents = lit_double_arrays([codebook[b] for b in sorted(codebook)])
+    rows = emb.select(
+        "vec", F.transform(cents, lambda c: dot_expr(F.col("vec"), c)).alias("affs")
+    ).collect()
+    V = np.array([r["vec"] for r in rows])
+    want = np.array([r["affs"] for r in rows])
+    got = _affinity_fold(np.array([codebook[b] for b in sorted(codebook)]))(V)
+    assert got.tobytes() == want.tobytes()
+
+    twins = {b: codebook[b - b % 2] for b in range(8)}
+    kernel, ref = _buckets(_assign_to_codebook(emb, twins)), _buckets(_reference_assign(emb, twins))
+    assert kernel == ref and len(kernel) == emb.count()
+    assert {b % 2 for b in kernel.values()} == {0}
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_ivf_codebook_matches_spark_aggregate_spelling(spark, sf_correct, sf):
+    """Under the training-set cap the driver-side Lloyd trains on the
+    whole corpus: the same codebook as the Spark-aggregate spelling to
+    1e-12 per coordinate, and the same assignment of every vector."""
+    from heatmap_spark.operators.similarity import _assign_to_codebook, ivf_codebook
+
+    emb = _emb_vec(spark, os.path.join(os.path.dirname(sf_correct), sf)).localCheckpoint()
+    for iters in (0, 1, 2):
+        got, want = ivf_codebook(emb, 8, iters), _reference_codebook(emb, 8, iters)
+        assert sorted(got) == sorted(want) == list(range(8))
+        err = max(abs(x - y) for b in got for x, y in zip(got[b], want[b], strict=True))
+        assert err <= 1e-12, (iters, err)
+        assert _buckets(_assign_to_codebook(emb, got)) == _buckets(_reference_assign(emb, want))
+
+
+def test_ivf_codebook_sample_is_independent_of_partitioning(spark, sf_correct, monkeypatch):
+    """Above the cap the codebook trains on the vectors with the
+    smallest (xxhash64(vec_id), vec_id): the same sample, so the same
+    codebook bit for bit, however the input is partitioned."""
+    from heatmap_spark.operators import similarity as sim
+
+    emb = _emb_vec(spark, sf_correct)
+    full = sim.ivf_codebook(emb, 8, 2)
+    monkeypatch.setattr(sim, "MAX_POINTS_PER_CENTROID", 8)  # 64 of 500 vectors
+    one = sim.ivf_codebook(emb.repartition(1), 8, 2)
+    seven = sim.ivf_codebook(emb.repartition(7), 8, 2)
+    assert one == seven
+    assert one != full
+
+
+def test_ivf_codebook_is_one_spark_job(spark, sf_correct):
+    """Training fetches its training set in one job; Lloyd runs on the
+    driver."""
+    from heatmap_spark.operators.similarity import ivf_codebook
+
+    emb = _emb_vec(spark, sf_correct)
+    sc = spark.sparkContext
+    group = f"ivf-codebook-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        codebook = ivf_codebook(emb, 8, 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(codebook) == 8
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
